@@ -29,7 +29,21 @@ import scala.util.control.NonFatal
   * retrains, staleness would silently mis-answer).
   */
 final class SessionMemo[K <: Product, V](onEvict: V => Unit) {
-  private val m = TrieMap.empty[K, V]
+  /** A key's value, built at most once: concurrent first accesses
+    * insert competing cells, but only the one the map keeps is ever
+    * forced, and a second caller blocks until its build finishes (a
+    * failed build leaves the cell empty, so the next access retries).
+    */
+  private final class Once(build: => V) {
+    private var value: Option[V] = None
+    def get: V = synchronized {
+      value.getOrElse { val v = build; value = Some(v); v }
+    }
+    /** The value if built; waits for a build in progress. */
+    def built: Option[V] = synchronized(value)
+  }
+
+  private val m = TrieMap.empty[K, Once]
   SessionMemos.register(this)
 
   private def sessionOf(k: K): SparkSession =
@@ -39,22 +53,24 @@ final class SessionMemo[K <: Product, V](onEvict: V => Unit) {
 
   def getOrElseUpdate(k: K, v: => V): V = {
     purgeStopped()
-    m.getOrElseUpdate(k, v)
+    m.getOrElseUpdate(k, new Once(v)).get
   }
 
   /** Explicit insert (the TableStats.inject seam). */
-  def put(k: K, v: V): Unit = { m.put(k, v); () }
+  def put(k: K, v: V): Unit = { m.put(k, new Once(v)); () }
 
   /** Entry count for `s` — the lifecycle specs' observation seam. */
   def sizeFor(s: SparkSession): Int =
     m.keys.count(sessionOf(_) eq s)
 
   private def evict(k: K, unpersist: Boolean): Unit =
-    m.remove(k).foreach { v =>
+    m.remove(k).foreach { cell =>
       // unpersist is best-effort: on a stopped context the blocks are
       // already gone and the call may throw — dropping the reference
       // is the point
-      if (unpersist) try onEvict(v) catch { case NonFatal(_) => () }
+      if (unpersist) cell.built.foreach { v =>
+        try onEvict(v) catch { case NonFatal(_) => () }
+      }
     }
 
   private[graft] def purgeStopped(): Unit =

@@ -1243,12 +1243,11 @@ SELECT band, n_true, n_found,
 FROM aud ORDER BY band""",
     // d17: d15's other half — precision of the band candidates and
     // the ≥8/16-verified set against the same d04 truth, same planted
-    // d18: the Spark side builds the labeling INCREMENTALLY (lake-only
-    // CC seed, then the delta's verified edges merge in via the
-    // contracted-cluster-graph fixpoint — the ClusterStream primitive);
-    // the oracle replays TWO full recursive closures (all docs,
-    // lake-only docs) from scratch, so the gate proves the fold equals
-    // the from-scratch transitive closure
+    // d18: the Spark side labels the lake-only and the full graph as
+    // two tagged graphs of one Dedup.components call (the routine
+    // ClusterStream folds deliveries with); the oracle replays TWO
+    // full recursive closures (all docs, lake-only docs) from scratch,
+    // so the gate proves both labelings equal the transitive closure
     "d18_incremental_clusters" ->
       s"""WITH RECURSIVE $minhashCtes,
 sims AS (SELECT c.doc_a, c.doc_b

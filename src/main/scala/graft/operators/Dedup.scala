@@ -2,8 +2,11 @@ package graft.operators
 
 import graft.{Tables, TableStats}
 import graft.functions.{Text, Vector}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Deduplication operators over the documents/embeddings tables
   * (SURVEY.md §2.4). Scale design: every near-dup operator generates
@@ -1086,23 +1089,147 @@ object Dedup {
       .orderBy(col("keeper_doc_id"))
   }
 
-  /** d07 — duplicate CLUSTERING: near-dup pairs (d02 MinHash-LSH,
-    * est_sim ≥ 0.5) define an undirected graph; every document gets
-    * `cluster_id` = the smallest doc_id in its connected component
-    * (the canonical keeper a dedup pass retains). Pregel-style
-    * min-label propagation: each iteration is one join + one
-    * aggregation, both key-equality shuffles; iterations = component
-    * diameter (tiny for dup clusters — dups of the same content link
-    * densely). The per-iteration convergence check is an aggregate
-    * (count of changed labels), not a data collect; intermediate
-    * labels are cached so lineage stays one iteration deep. The
-    * oracle replays it with a recursive transitive-closure CTE.
+  /** Edge count up to which [[components]] runs on the driver: 1M
+    * (g, x, y) rows of longs is a few tens of MB of driver heap.
     */
-  /** Lineage truncation for the iterative loop below. By default this
-    * is `localCheckpoint()` — blocks live in executor memory, which is
-    * fine on `local[n]` but LOST on executor death, so on a real
-    * cluster set `spark.graft.checkpointDir` to a reliable (HDFS/S3)
-    * path: the frames are then written through
+  private val DriverMaxEdges: Int = 1 << 20
+
+  /** Connected components of independent tagged undirected graphs —
+    * the one CC routine under d07, d18 and streaming.ClusterStream.
+    * `edges` holds (g, x, y) rows with integral ids, either direction,
+    * duplicates allowed. Returns (g, node, lbl) for every node that
+    * has an edge in graph g, where `lbl` is the smallest node of its
+    * component within g. Min-label components are unique, so both
+    * paths give the same rows and the oracle's recursive closures
+    * replay them. Nodes without an edge do not appear; callers
+    * coalesce them to their own id.
+    *
+    * One bounded collect picks the path: up to [[DriverMaxEdges]]
+    * edges run [[driverComponents]], whose local relation Catalyst
+    * can size, so callers' label joins broadcast on their own; more
+    * run [[distributedComponents]].
+    */
+  private[graft] def components(edges: DataFrame): DataFrame = {
+    val few = edges.select(col("g"), col("x"), col("y"))
+      .limit(DriverMaxEdges + 1).collect()
+    if (few.length > DriverMaxEdges) distributedComponents(edges)
+    else driverComponents(edges, few)
+  }
+
+  /** [[components]] on the driver over `rows`, the collected (g, x, y)
+    * rows of `edges` (whose schema types the output): min-root
+    * union-find with path halving, so every root is its component's
+    * minimum.
+    */
+  private[graft] def driverComponents(edges: DataFrame,
+      rows: Array[Row]): DataFrame = {
+    def num(r: Row, i: Int): Long = r.get(i).asInstanceOf[Number].longValue
+    val forest = mutable.HashMap.empty[Long, mutable.LongMap[Long]]
+    def root(p: mutable.LongMap[Long], x0: Long): Long = {
+      var x = x0
+      var px = p.getOrElseUpdate(x, x)
+      while (px != x) {
+        val gp = p(px)
+        p(x) = gp
+        x = gp
+        px = p(x)
+      }
+      x
+    }
+    rows.foreach { r =>
+      val p = forest.getOrElseUpdate(num(r, 0), mutable.LongMap.empty[Long])
+      val a = root(p, num(r, 1))
+      val b = root(p, num(r, 2))
+      if (a < b) p(b) = a else if (b < a) p(a) = b
+    }
+    val out = forest.toSeq.flatMap { case (g, p) =>
+      p.keys.toSeq.map(x => Row(g, x, root(p, x)))
+    }
+    val longs = StructType(Seq("g", "node", "lbl")
+      .map(StructField(_, LongType, nullable = false)))
+    val xType = edges.schema("x").dataType
+    edges.sparkSession.createDataFrame(out.asJava, longs)
+      .select(col("g").cast(edges.schema("g").dataType),
+        col("node").cast(xType), col("lbl").cast(xType))
+  }
+
+  /** [[components]] for edge sets too large for the driver: min-label
+    * propagation that also hooks each label node, plus pointer
+    * jumping, so rounds grow with the log of the diameter (a random
+    * 70-hop chain takes 6 rounds; propagation alone took 46). Each
+    * round is ONE action — the eager checkpoint of the new labels,
+    * whose observed metric counts the labels that changed (labels
+    * only decrease) — and the loop stops at the first round with no
+    * change or after 50 rounds, with a warning. It runs under the
+    * caller's session and conf; every frame it re-reads goes through
+    * [[truncateLineage]], and superseded checkpoint files are deleted
+    * as the loop advances.
+    */
+  private[graft] def distributedComponents(edges: DataFrame): DataFrame = {
+    val s = edges.sparkSession
+    // symmetrize through ONE generator: a union of two selects would
+    // execute the edge subtree twice in the checkpoint job
+    val und = truncateLineage(s, edges
+      .select(col("g"), explode(array(
+        struct(col("x").as("a"), col("y").as("b")),
+        struct(col("y").as("a"), col("x").as("b")))).as("e"))
+      .select(col("g"), col("e.a").as("x"), col("e.b").as("y")))
+    // `g` is renamed per frame (lg/yg/mg/pg) because every frame in the
+    // loop descends from `und` — a shared name would resolve to the
+    // same attribute on both sides of the self-joins
+    var lbl = und.select(col("g").as("lg"), col("x").as("node")).distinct()
+      .select(col("lg"), col("node"), col("node").as("lbl"))
+    var converged = false
+    var iter = 0
+    while (!converged && iter < 50) {
+      // each edge (x, y) offers x's label to y AND to y's label:
+      // hooking the label node too merges whole labelled trees in one
+      // round, where offers to y alone move a label one hop per round
+      val yLbl = lbl.select(col("lg").as("yg"), col("node").as("yn"),
+        col("lbl").as("ylbl"))
+      val msgs = und.join(lbl,
+          col("g") === col("lg") && col("x") === col("node"))
+        .join(yLbl, col("g") === col("yg") && col("y") === col("yn"))
+        .select(col("g"), explode(array(col("y"), col("ylbl"))).as("to"),
+          col("lbl").as("cand"))
+        .groupBy(col("g"), col("to")).agg(min(col("cand")).as("cand"))
+        .select(col("g").as("mg"), col("to"), col("cand"))
+      val prop = lbl.join(msgs,
+          col("lg") === col("mg") && col("node") === col("to"), "left")
+        .select(col("lg"), col("node"), col("lbl").as("old"),
+          least(col("lbl"), coalesce(col("cand"), col("lbl"))).as("lbl"))
+      // pointer jumping: also adopt the label of your label
+      val parents = prop.select(col("lg").as("pg"),
+        col("node").as("pid"), col("lbl").as("plbl"))
+      val obs = org.apache.spark.sql.Observation(s"graft-cc-$iter-" +
+        System.identityHashCode(und))
+      val upd = truncateLineage(s, prop.join(parents,
+          col("lg") === col("pg") && col("lbl") === col("pid"), "left")
+        .select(col("lg"), col("node"), col("old"),
+          least(col("lbl"), coalesce(col("plbl"), col("lbl"))).as("lbl"))
+        .observe(obs,
+          coalesce(sum(when(col("lbl") < col("old"), 1L).otherwise(0L)),
+            lit(0L)).as("changed"))
+        .drop("old"))
+      converged = obs.get("changed").asInstanceOf[Long] == 0L
+      checkpointFileOf(lbl).foreach(deleteCheckpointFile(s, _))
+      lbl = upd
+      iter += 1
+    }
+    // the final labels are materialized and no longer read the edges
+    checkpointFileOf(und).foreach(deleteCheckpointFile(s, _))
+    if (!converged)
+      System.err.println(s"[graft] WARNING: connected components hit the " +
+        s"$iter-round cap without converging — labels may not be the " +
+        "full transitive closure")
+    lbl.select(col("lg").as("g"), col("node"), col("lbl"))
+  }
+
+  /** Lineage truncation for [[distributedComponents]]. By default
+    * this is `localCheckpoint()` — blocks live in executor memory,
+    * which is fine on `local[n]` but LOST on executor death, so on a
+    * real cluster set `spark.graft.checkpointDir` to a reliable
+    * (HDFS/S3) path: the frames are then written through
     * `SparkContext.setCheckpointDir` + an eager `checkpoint()`, and a
     * lost executor recomputes from the checkpoint files instead of
     * replaying the whole upstream pipeline. Both flavors are eager, so
@@ -1119,114 +1246,14 @@ object Dedup {
     *    warning) if some other component already set it elsewhere —
     *    `setCheckpointDir` is first-write-wins and would otherwise
     *    silently ignore `spark.graft.checkpointDir`;
-    *  - callers can delete superseded checkpoint files via
+    *  - callers delete superseded checkpoint files via
     *    [[checkpointFileOf]]/[[deleteCheckpointFile]] — the context
     *    cleaner only removes them if
     *    `spark.cleaner.referenceTracking.cleanCheckpoints` was set at
     *    context creation, which a library cannot assume.
     */
-  /** Execute `body` (EAGER work only — checkpoints, counts, the
-    * fixpoint loops) under a partitioning sized to a MEASURED tiny
-    * input instead of the session default. The iterative CC loops
-    * (d07/d18/ClusterStream) run a handful of joins per round over
-    * frames bounded by the EDGE-INCIDENT subset, which at harness
-    * scale is a few hundred rows: under the session conf every round
-    * pays AQE's per-shuffle stage materialization (one scheduler job
-    * per Exchange — measured 5–6 jobs/round, ~45 ms each, ~70% of
-    * d18's wall time), all to plan 32-partition shuffles of <10 KB.
-    * When `rows` (the measured, already-checkpointed edge count) is
-    * under `spark.graft.microloop.maxRows` (default 1,048,576 — at
-    * 16 B/row comfortably one task), the loop instead runs with
-    * shuffle.partitions = ⌈rows/65536⌉ and AQE off, so one
-    * checkpoint action is ONE job of a few tiny stages. Above the
-    * threshold (any real-corpus lake CC) nothing changes: session
-    * conf, AQE coalescing/skew handling intact — the adaptation is
-    * keyed on measured input size, never on the local core count.
-    * Confs are restored in `finally`; eager-only scope means frames
-    * RETURNED to callers execute under the caller's own conf.
-    */
-  /** The micro-loop row threshold (`spark.graft.microloop.maxRows`,
-    * default 1,048,576) — shared by [[microLoopSession]] and the
-    * conditional broadcast hints the loops apply below it.
-    */
-  private[graft] def microLoopMaxRows(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.microloop.maxRows")
-      .map(_.toLong).getOrElse(1L << 20)
-
-  /** Broadcast `df` only when the MEASURED loop input is under the
-    * micro-loop threshold: a localCheckpoint'd frame has no usable
-    * size estimate, so the planner sort-merges every tiny loop join
-    * (measured ~4 exchanges/round, ~30 ms of stage scheduling each);
-    * below the threshold the frames are row-bounded by construction
-    * and a broadcast join erases all but the aggregation exchange.
-    * Above it nothing changes — size-keyed, never core-keyed.
-    */
-  private[graft] def bcIfMicro(s: SparkSession, rows: Long)(
-      df: DataFrame): DataFrame =
-    if (rows >= 0 && rows <= microLoopMaxRows(s)) broadcast(df) else df
-
-  /** A PRIVATE session clone carrying the micro-loop conf, or None
-    * above the threshold. The r13 form mutated the SHARED session's
-    * conf (restored in finally) — safe under the serial Verify/Bench
-    * harness but a latent trap for library callers running parallel
-    * queries (anything planned during the window saw 1-ish shuffle
-    * partitions with AQE off, and two interleaved micro-loops could
-    * restore stale values). The clone shares the SparkContext and
-    * cache but owns its SQL conf, so the caller's session is NEVER
-    * touched; loop inputs (checkpointed frames) are rebound onto it
-    * via [[rebindTo]] and results rebound back.
-    *
-    * Conf on the clone: shuffle.partitions = ⌈rows/65536⌉ (capped at
-    * the caller's setting), AQE off (per-shuffle stage jobs cost more
-    * than they plan at this size), wholestage codegen off (compiling
-    * fresh classes per round dominates executing them). Keyed on the
-    * MEASURED row count, never the core count.
-    */
-  private[graft] def microLoopSession(s: SparkSession,
-      rows: Long): Option[SparkSession] =
-    if (rows < 0 || rows > microLoopMaxRows(s)) None
-    else {
-      val s2 = org.apache.spark.sql.graftbridge.DatasetBridge.cloneSession(s)
-      val p = math.min(rows / 65536L + 1L,
-        s.conf.getOption("spark.sql.shuffle.partitions")
-          .flatMap(_.toLongOption).getOrElse(200L))
-      s2.conf.set("spark.sql.shuffle.partitions", p.toString)
-      s2.conf.set("spark.sql.adaptive.enabled", "false")
-      s2.conf.set("spark.sql.codegen.wholeStage", "false")
-      // clones do NOT inherit experimental strategies (the r8b
-      // foreachBatch lesson) — loops that rank through TopKPerKey
-      // need the planner rule present
-      graft.plans.GraftExtensions.install(s2)
-      Some(s2)
-    }
-
-  /** Rebind a frame onto another session of the SAME SparkContext by
-    * re-wrapping its analyzed plan — how micro-loop inputs (usually
-    * checkpointed LogicalRDDs) enter the private clone and results
-    * leave it. The plan is session-agnostic (path-based scans, no
-    * temp views); execution then plans under `to`'s conf.
-    */
-  private[graft] def rebindTo(to: SparkSession, df: DataFrame): DataFrame =
-    if (df.sparkSession eq to) df
-    else org.apache.spark.sql.graftbridge.DatasetBridge.ofRows(
-      to, df.queryExecution.analyzed)
-
-  /** Run `body` against micro-loop-conf'd rebinds of `frames` on a
-    * private clone (identity above the threshold): the common wrapper
-    * for eager loop work — checkpoints, counts, fixpoint rounds. The
-    * caller must rebind RESULT frames back via the returned session
-    * pair ([[rebindTo]](s, …)) before handing them out, so lazy tails
-    * execute under the caller's own conf.
-    */
-  private[graft] def withMicroLoopSession[T](s: SparkSession, rows: Long,
-      frames: Seq[DataFrame])(body: (SparkSession, Seq[DataFrame]) => T): T =
-    microLoopSession(s, rows) match {
-      case Some(s2) => body(s2, frames.map(rebindTo(s2, _)))
-      case None => body(s, frames)
-    }
-
-  private def truncateLineage(s: SparkSession, df: DataFrame): DataFrame =
-    s.conf.getOption("spark.graft.checkpointDir").filter(_.nonEmpty) match {
+  private def truncateLineage(s: SparkSession, df: DataFrame): DataFrame = {
+    val cp = s.conf.getOption("spark.graft.checkpointDir").filter(_.nonEmpty) match {
       case Some(d) =>
         val sc = s.sparkContext
         val wanted = {
@@ -1251,6 +1278,18 @@ object Dedup {
         cp
       case None => df.localCheckpoint()
     }
+    // a checkpoint keeps its source plan's size estimate, and the
+    // loop's joins multiply estimates: carried from round to round,
+    // the estimate's digits grow fourfold per round and planning a
+    // long chain's later rounds stalls in BigInt arithmetic
+    cp.queryExecution.analyzed match {
+      case l: org.apache.spark.sql.execution.LogicalRDD =>
+        org.apache.spark.sql.graftbridge.DatasetBridge.ofRows(s,
+          l.copy()(s.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+            None, None))
+      case _ => cp
+    }
+  }
 
   /** Reliable-checkpoint file of a truncateLineage result (None in
     * localCheckpoint mode).
@@ -1269,150 +1308,32 @@ object Dedup {
           s"checkpoint $path: ${e.getMessage}")
     }
 
+  /** d07 — duplicate CLUSTERING: near-dup pairs (d02 MinHash-LSH,
+    * est_sim ≥ 0.5) define an undirected graph; every document gets
+    * `cluster_id` = the smallest doc_id in its connected component
+    * (the canonical keeper a dedup pass retains). [[components]] runs
+    * over the edge-incident documents only; the singleton majority
+    * joins back with its own id. The oracle replays it with a
+    * recursive transitive-closure CTE.
+    */
   def dupClusters(s: SparkSession, dir: String): DataFrame =
     dupClustersFrame(s, dir).orderBy(col("doc_id"))
 
+  /** d07's near-dup graph as [[components]] edges (one graph, g = 0):
+    * est_sim ≥ 0.5 as the integer matches ≥ 8.
+    */
+  private[graft] def dupEdges(s: SparkSession, dir: String): DataFrame =
+    pairMatchCounts(s, dir).filter(col("matches") >= 8)
+      .select(lit(0).as("g"), col("doc_a").as("x"), col("doc_b").as("y"))
+
   /** d07's unsorted body (the factored-body rule for joins over it). */
   private[graft] def dupClustersFrame(s: SparkSession, dir: String): DataFrame = {
-    // est_sim is an exact multiple of 1/16, so >= 0.5 is float-safe
-    val sims = minhashLsh(s, dir).filter(col("est_sim") >= 0.5)
-      .select(col("doc_a"), col("doc_b"))
-    // checkpoint (not cache) everything the loop re-references:
-    // an iterative self-referencing plan re-inlines the whole upstream
-    // pipeline on every use (measured: 160 FileScans / 1.1 MB plan per
-    // iteration with cache()); checkpointing physically truncates the
-    // lineage so each iteration plans only its own two tiny joins.
-    // Reliable vs executor-memory flavor per truncateLineage above.
-    val edges0 = truncateLineage(s, sims
-      .union(sims.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"))))
-    // the loop below runs on frames bounded by the edge-incident
-    // subset — size the micro-loop partitioning off the measured
-    // (checkpointed) edge count, not the session default (counted
-    // off the checkpointed RDD: one job, no fresh SQL planning).
-    // The loop executes on a PRIVATE session clone (ls) carrying the
-    // micro conf; the results rebind to the caller's session below.
-    val edgeRows = edges0.queryExecution.toRdd.count()
-    withMicroLoopSession(s, edgeRows, Seq(edges0)) { case (ls, Seq(edges)) =>
-    // propagate only over documents that have at least one edge — the
-    // overwhelming singleton majority never changes label and joins
-    // back after convergence, so each iteration touches only the
-    // (small) paired subset
-    val paired = truncateLineage(ls,
-      edges.select(col("doc_a").as("doc_id")).distinct())
-    // no checkpoint on the seed labels: round 1 derives them inline
-    // from the checkpointed paired frame (the minLabelFixpoint rule)
-    var labels: DataFrame =
-      paired.select(col("doc_id"), col("doc_id").as("cluster_id"))
-    var converged = false
-    var iter = 0
-    while (!converged && iter < 50) {
-      // (1) neighbor propagation: min label over incident edges
-      val msgs = edges.join(labels, col("doc_a") === col("doc_id"))
-        .groupBy(col("doc_b")).agg(min(col("cluster_id")).as("cand"))
-      val prop = labels.join(msgs, labels("doc_id") === msgs("doc_b"), "left")
-        .select(labels("doc_id"), labels("cluster_id").as("old"),
-          least(labels("cluster_id"),
-            coalesce(col("cand"), labels("cluster_id"))).as("cluster_id"))
-      // (2) path halving (pointer jumping): also adopt the label of
-      // your current label — collapses chains in O(log diameter)
-      // rounds instead of O(diameter)
-      val parents = prop
-        .select(col("doc_id").as("pid"), col("cluster_id").as("pcl"))
-      // ONE action per round: the convergence signal rides the
-      // checkpoint materialization as an observed metric (labels only
-      // ever decrease, so strict < detects any change) instead of a
-      // second count job over a join against the previous labels
-      val obs = org.apache.spark.sql.Observation(s"graft-cc-$iter")
-      val upd = truncateLineage(ls,
-        prop.join(parents, col("cluster_id") === col("pid"), "left")
-          .select(col("doc_id"), col("old"),
-            least(col("cluster_id"), coalesce(col("pcl"), col("cluster_id")))
-              .as("cluster_id"))
-          .observe(obs,
-            coalesce(sum(when(col("cluster_id") < col("old"), 1L).otherwise(0L)),
-              lit(0L)).as("changed"))
-          .drop("old"))
-      converged = obs.get("changed").asInstanceOf[Long] == 0L
-      // upd is materialized (eager checkpoint) and no longer reads the
-      // previous labels frame — delete its now-superseded reliable
-      // checkpoint files so a run leaves O(1) dirs (edges, paired,
-      // final labels — all still referenced by the returned plan),
-      // not O(iterations). No-op in localCheckpoint mode.
-      checkpointFileOf(labels).foreach(deleteCheckpointFile(ls, _))
-      labels = upd
-      iter += 1
-    }
-    if (!converged)
-      System.err.println(s"[graft] WARNING: dupClusters hit the $iter-round " +
-        "cap without converging — labels may not be the full transitive closure")
-    // checkpointed results rebind to the caller's session so the
-    // lazy tail below plans under the caller's own conf
-    (rebindTo(s, labels), rebindTo(s, paired))
-    } match { case (labels, paired) =>
-      val singletons = Tables.documents(s, dir).select(col("doc_id"))
-        .join(paired, Seq("doc_id"), "left_anti")
-        .select(col("doc_id"), col("doc_id").as("cluster_id"))
-      labels.union(singletons)
-    }
-  }
-
-  /** Min-label convergence over a CONTRACTED cluster graph: nodes
-    * (node) seeded lbl = node, undirected edges (x, y); returns
-    * (node, lbl) at the fixpoint (lbl = component minimum). The
-    * frames are cluster-graph-sized (one node per TOUCHED cluster or
-    * new doc — never the corpus); localCheckpoint truncates the
-    * iterative lineage (the d07 discipline), and pointer jumping
-    * keeps rounds O(log diameter). Shared by the d18 batch merge and
-    * streaming.ClusterStream's per-delivery fold.
-    */
-  private[graft] def minLabelFixpoint(nodes0: DataFrame,
-      edges: DataFrame, rowsHint: Long = -1L): DataFrame = {
-    val s0 = nodes0.sparkSession
-    val und0 = edges.select(col("x"), col("y"))
-      .union(edges.select(col("y").as("x"), col("x").as("y")))
-      .localCheckpoint()
-    // size the loop partitioning off the measured (checkpointed)
-    // contracted-edge count — see microLoopSession. Callers that
-    // already measured their edge frame pass the count through
-    // (rowsHint); otherwise count the checkpointed RDD directly —
-    // one job, no fresh SQL planning. The loop runs on a PRIVATE
-    // session clone; the result rebinds to the caller's session.
-    val rows = if (rowsHint >= 0L) rowsHint
-      else und0.queryExecution.toRdd.count()
-    withMicroLoopSession(s0, rows, Seq(und0, nodes0)) {
-      case (ls, Seq(und, nodes)) =>
-    // no checkpoint on the seed labels: round 1 derives them inline
-    // from the (checkpointed) nodes frame; every later round's lbl is
-    // the previous round's checkpointed upd, so lineage stays flat
-    var lbl = nodes.select(col("node"), col("node").as("lbl"))
-    var converged = false
-    var iter = 0
-    while (!converged && iter < 50) {
-      val msgs = und.join(lbl, col("x") === col("node"))
-        .groupBy(col("y")).agg(min(col("lbl")).as("cand"))
-      val prop = lbl.join(msgs, col("node") === col("y"), "left")
-        .select(col("node"), col("lbl").as("old"),
-          least(col("lbl"), coalesce(col("cand"), col("lbl"))).as("lbl"))
-      val parents = prop.select(col("node").as("pid"), col("lbl").as("plbl"))
-      // ONE action per round: the convergence signal rides the eager
-      // checkpoint as an observed metric (labels only decrease — the
-      // d07 Observation discipline), not a second count job
-      val obs = org.apache.spark.sql.Observation(s"graft-mlfp-$iter-" +
-        System.identityHashCode(und))
-      val upd = prop.join(parents, col("lbl") === col("pid"), "left")
-        .select(col("node"), col("old"),
-          least(col("lbl"), coalesce(col("plbl"), col("lbl"))).as("lbl"))
-        .observe(obs,
-          coalesce(sum(when(col("lbl") < col("old"), 1L).otherwise(0L)),
-            lit(0L)).as("changed"))
-        .drop("old")
-        .localCheckpoint()
-      converged = obs.get("changed").asInstanceOf[Long] == 0L
-      lbl = upd
-      iter += 1
-    }
-    rebindTo(s0, lbl)
-    }
+    val labels = components(dupEdges(s, dir))
+      .select(col("node").as("doc_id"), col("lbl").as("cluster_id"))
+    val singletons = Tables.documents(s, dir).select(col("doc_id"))
+      .join(labels, Seq("doc_id"), "left_anti")
+      .select(col("doc_id"), col("doc_id").as("cluster_id"))
+    labels.union(singletons)
   }
 
   /** Verified near-dup edges INCIDENT to a probe signature frame:
@@ -1444,80 +1365,6 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"))
   }
 
-  /** Min-label convergence over INDEPENDENT tagged graphs in ONE
-    * fixpoint loop (the r13-verdict d18 fusion): `und` holds several
-    * disjoint undirected graphs as (g, x, y) rows — SYMMETRIC, the
-    * caller emits both directions — and the loop is exactly the
-    * [[minLabelFixpoint]] recurrence with (g, node) as the composite
-    * node key. Returns (g, node, lbl) at every graph's fixpoint
-    * (lbl = component minimum within graph g); only edge-incident
-    * nodes appear (the d07 `paired` rule — an untouched node keeps
-    * its own id, the caller coalesces).
-    *
-    * d18 runs its lake-only closure (g=0) and full closure (g=1)
-    * through one loop: two sequential contraction+fixpoint passes
-    * each paid their own checkpoint round-trips and per-round
-    * scheduler jobs; the fused loop pays max(rounds) over the union
-    * of both edge sets instead of the sum, and the contraction stage
-    * disappears outright (min-label CC over raw doc ids equals the
-    * contracted fixpoint's rename application — both are the
-    * component minimum).
-    */
-  private[graft] def taggedMinLabelFixpoint(undIn: DataFrame,
-      rowsHint: Long = -1L): DataFrame = {
-    // callers that already checkpointed + measured the symmetric edge
-    // frame pass the count through (the minLabelFixpoint rowsHint
-    // convention) — a second localCheckpoint would copy the RDD again
-    val und0 = if (rowsHint >= 0L) undIn else undIn.localCheckpoint()
-    val rows = if (rowsHint >= 0L) rowsHint
-      else und0.queryExecution.toRdd.count()
-    val s0 = und0.sparkSession
-    // (broadcast hints inside the loop measured NEUTRAL-to-worse: at
-    // 1 shuffle partition the exchanges are one-task cheap, and each
-    // BroadcastExchange added its own build job — left as shuffles)
-    withMicroLoopSession(s0, rows, Seq(und0)) { case (ls, Seq(und)) =>
-    // seed labels derive inline from the checkpointed edge frame
-    // (und is symmetric, so x alone covers every endpoint per graph);
-    // `g` is renamed per frame (lg/mg/pg) because every frame in the
-    // loop descends from `und` — a shared name would resolve to the
-    // same attribute on both sides of the self-joins
-    var lbl = und.select(col("g").as("lg"), col("x").as("node")).distinct()
-      .select(col("lg"), col("node"), col("node").as("lbl"))
-    var converged = false
-    var iter = 0
-    while (!converged && iter < 50) {
-      val msgs = und.join(lbl,
-          col("g") === col("lg") && col("x") === col("node"))
-        .groupBy(col("g"), col("y")).agg(min(col("lbl")).as("cand"))
-        .select(col("g").as("mg"), col("y"), col("cand"))
-      val prop = lbl.join(msgs,
-          col("lg") === col("mg") && col("node") === col("y"), "left")
-        .select(col("lg"), col("node"), col("lbl").as("old"),
-          least(col("lbl"), coalesce(col("cand"), col("lbl"))).as("lbl"))
-      val parents = prop.select(col("lg").as("pg"),
-        col("node").as("pid"), col("lbl").as("plbl"))
-      // ONE action per round: the convergence signal rides the eager
-      // checkpoint as an observed metric (labels only decrease — the
-      // d07 Observation discipline), not a second count job
-      val obs = org.apache.spark.sql.Observation(s"graft-tmlfp-$iter-" +
-        System.identityHashCode(und))
-      val upd = prop.join(parents,
-          col("lg") === col("pg") && col("lbl") === col("pid"), "left")
-        .select(col("lg"), col("node"), col("old"),
-          least(col("lbl"), coalesce(col("plbl"), col("lbl"))).as("lbl"))
-        .observe(obs,
-          coalesce(sum(when(col("lbl") < col("old"), 1L).otherwise(0L)),
-            lit(0L)).as("changed"))
-        .drop("old")
-        .localCheckpoint()
-      converged = obs.get("changed").asInstanceOf[Long] == 0L
-      lbl = upd
-      iter += 1
-    }
-    rebindTo(s0, lbl).select(col("lg").as("g"), col("node"), col("lbl"))
-    }
-  }
-
   /** d18's delta-incident verified edges (observability/telemetry
     * surface — the fold's pre-merge workload the bench tracks
     * round-over-round, like the d02–d14 cand_pairs rows).
@@ -1532,26 +1379,23 @@ object Dedup {
     * d07's transitive closure. The output needs TWO labelings — the
     * full closure over lake ∪ delta-incident edges (`cluster_id`) and
     * the lake-only closure (the seed `relabeled` compares against) —
-    * so both run as tagged graphs through ONE
-    * [[taggedMinLabelFixpoint]] loop (r13 verdict item 1: the former
-    * two sequential mergeClusterLabels passes each paid their own
-    * checkpoint + contraction + fixpoint round-trips, ~50 scheduler
-    * jobs; the fused loop pays one). Min-label CC is
-    * associative/idempotent/commutative, so the from-scratch closure
-    * here equals any fold order a production ingest applies — the
-    * ORACLE replays exactly these two recursive closures and the gate
-    * PROVES the equality at every SF (c08 keys leakage-safe splits on
-    * these ids). The output labels every doc and declares `is_delta`
-    * and `relabeled` (label differs from the lake-only seed; for a
-    * delta doc, from its own id — i.e. it joined a cluster).
+    * so both run as tagged graphs through ONE [[components]] call.
+    * Min-label CC is associative/idempotent/commutative, so the
+    * from-scratch closure here equals any fold order a production
+    * ingest applies — the ORACLE replays exactly these two recursive
+    * closures and the gate PROVES the equality at every SF (c08 keys
+    * leakage-safe splits on these ids). The output labels every doc
+    * and declares `is_delta` and `relabeled` (label differs from the
+    * lake-only seed; for a delta doc, from its own id — i.e. it
+    * joined a cluster).
     *
     * Scale shape: the probe is d11's key-equality band join
     * ([[verifiedIncidentEdges]] — one band probe covers delta-vs-lake
-    * and delta-vs-delta), the fixpoint runs only on EDGE-INCIDENT
-    * docs (never the corpus), and the apply is two keyed joins of the
+    * and delta-vs-delta), components run only on EDGE-INCIDENT docs
+    * (never the corpus), and the apply is two keyed joins of the
     * tiny labeled set against the doc list. The TRUE fold-against-a-
     * persisted-store increment — contraction to the stored cluster
-    * graph + [[minLabelFixpoint]] + bucket-pruned rewrite — is the
+    * graph + [[components]] + bucket-pruned rewrite — is the
     * streaming twin ClusterStream; this batch query recomputes both
     * closures from parquet per invocation, as the driver contract
     * requires.
@@ -1562,44 +1406,26 @@ object Dedup {
     // its verified pairs PARTITION into lake-lake (both %10≠0 — band
     // keys are per-doc, so this equals pairMatchCountsOf over the
     // lake slice alone) and delta-incident (the rest — equals the
-    // deltaSig-vs-allSig probe of verifiedIncidentEdges). The r13
-    // variant that kept two merge passes over a shared pair frame
-    // measured slower; with the fused fixpoint the single pass feeds
-    // the one edge checkpoint directly and the second band join +
-    // verify join disappear from the plan.
+    // deltaSig-vs-allSig probe of verifiedIncidentEdges).
     val allSig = minhashSignatures(s, dir).cache()
     val allEdges = pairMatchCountsOf(allSig)
       .filter(col("matches") >= 8).select(col("doc_a"), col("doc_b"))
-    // tag + symmetrize via ONE generator (a union of two selects over
-    // the same frame would execute its subtree twice in the
-    // checkpoint action): lake-lake edges enter BOTH graphs (g=0
-    // lake-only seed closure, g=1 full closure), delta-incident
-    // edges only g=1.
-    def sym(g: Int) = Seq(
-      struct(lit(g).as("g"), col("doc_a").as("x"), col("doc_b").as("y")),
-      struct(lit(g).as("g"), col("doc_b").as("x"), col("doc_a").as("y")))
+    // lake-lake edges enter BOTH graphs (g=0 lake-only seed closure,
+    // g=1 full closure), delta-incident edges only g=1
     val isLake = col("doc_a") % 10 =!= 0 && col("doc_b") % 10 =!= 0
-    val und = allEdges
-      .select(isLake.as("lk"), explode(array(sym(0) ++ sym(1): _*)).as("e"))
-      .filter(col("e.g") === 1 || col("lk"))
-      .select(col("e.g").as("g"), col("e.x").as("x"), col("e.y").as("y"))
-      .localCheckpoint()
-    // measured once, shared by the fixpoint conf and the conditional
-    // broadcasts below (one job off the checkpointed RDD)
-    val edgeRows = und.queryExecution.toRdd.count()
-    val fp = taggedMinLabelFixpoint(und, rowsHint = edgeRows)
+    val fp = components(allEdges.select(
+      explode(when(isLake, array(lit(0), lit(1))).otherwise(array(lit(1))))
+        .as("g"),
+      col("doc_a").as("x"), col("doc_b").as("y")))
     val allLbl = fp.filter(col("g") === 1)
       .select(col("node").as("doc_id"), col("lbl").as("all_lbl"))
     val lakeLbl = fp.filter(col("g") === 0)
       .select(col("node").as("doc_id"), col("lbl").as("seed_lbl"))
-    // edge-incident docs carry fixpoint labels; everyone else keeps
-    // their own id in both closures (the coalesce). The label sides
-    // are edge-incident-bounded: broadcast below the measured
-    // threshold (checkpointed frames estimate huge, so the planner
-    // would otherwise shuffle the corpus doc list by key)
+    // edge-incident docs carry component labels; everyone else keeps
+    // their own id in both closures (the coalesce)
     docs.select(col("doc_id"))
-      .join(bcIfMicro(s, edgeRows)(allLbl), Seq("doc_id"), "left")
-      .join(bcIfMicro(s, edgeRows)(lakeLbl), Seq("doc_id"), "left")
+      .join(allLbl, Seq("doc_id"), "left")
+      .join(lakeLbl, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("all_lbl"), col("doc_id")).as("cluster_id"),
         (col("doc_id") % 10 === 0).as("is_delta"),

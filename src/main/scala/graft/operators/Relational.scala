@@ -502,24 +502,11 @@ object Relational {
     graft.plans.GraftExtensions.install(s)
     // the ONLY corpus-sized stage: distinct (type, hash) scan trimmed
     // to ≤k rows per type — checkpoint it so the set-algebra tail
-    // never re-reads the corpus, and measure it for the micro-loop
-    val kept = graft.plans.TopK.perKey(
+    // never re-reads the corpus
+    overlapFromKept(graft.plans.TopK.perKey(
         overlapHashes(Tables.events(s, dir)), Seq(col("t")),
         Seq(col("h").asc), k)
-      .localCheckpoint()
-    val rows = kept.queryExecution.toRdd.count()
-    // the tail is |types|²·k-row sketch algebra (~6 shuffles): under
-    // the session conf each shuffle paid an AQE stage job (~45 ms) to
-    // plan 32-partition exchanges of a few KB — run it eagerly on the
-    // measured PRIVATE micro-loop session (the d07/d18 discipline;
-    // above the threshold nothing changes) and hand the caller the
-    // materialized bounded result plus the contract sort
-    val body = graft.operators.Dedup.withMicroLoopSession(s, rows,
-        Seq(kept)) { case (ls, Seq(keptB)) =>
-      graft.operators.Dedup.rebindTo(s,
-        overlapFromKeptFrame(keptB, k).localCheckpoint())
-    }
-    body.orderBy(col("type_a"), col("type_b"))
+      .localCheckpoint(), k)
   }
 
   /** r37's sketch element space: distinct salted 32-bit user hashes
@@ -535,19 +522,10 @@ object Relational {
 
   /** r37's set-algebra assembly from a (possibly folded) ≤k-per-type
     * kept sketch — the streaming read and the batch query share this
-    * verbatim.
+    * verbatim. `kept` is read three times, so callers pass it
+    * materialized (checkpointed or cached).
     */
-  private[graft] def overlapFromKept(kept0: DataFrame, k: Int): DataFrame =
-    overlapFromKeptFrame(kept0.cache(), k)
-      .orderBy(col("type_a"), col("type_b"))
-
-  /** [[overlapFromKept]]'s unsorted body over an ALREADY-materialized
-    * (cached or checkpointed) kept frame — the batch query runs it
-    * eagerly under the micro-loop conf; the streaming read keeps the
-    * lazy cached form.
-    */
-  private[graft] def overlapFromKeptFrame(kept: DataFrame,
-      k: Int): DataFrame = {
+  private[graft] def overlapFromKept(kept: DataFrame, k: Int): DataFrame = {
     val per = kept.groupBy(col("t"))
       .agg(count(lit(1)).as("nk"), max(col("h")).as("hk"))
       .select(col("t"),
@@ -576,6 +554,7 @@ object Relational {
         col("est_a"), col("est_b"), col("est_union"), col("est_overlap"),
         expr("CAST(est_overlap * 10000 DIV greatest(est_union, 1) AS BIGINT)")
           .as("jaccard_bp"))
+      .orderBy(col("type_a"), col("type_b"))
   }
 
   /** r13 — the exact counterpart of approxStats: true distinct counts

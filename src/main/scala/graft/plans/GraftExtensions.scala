@@ -173,7 +173,7 @@ object GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => RewriteWindowTopK)
     ext.injectPlannerStrategy(_ => TopKStrategy)
     ext.injectFunction((
-      new FunctionIdentifier("graft_dot"),
+      GraftDot,
       new ExpressionInfo(classOf[FloatVecDot].getName, "graft_dot"),
       (children: Seq[Expression]) => FloatVecDot(children(0), children(1))))
   }
@@ -192,11 +192,14 @@ object GraftExtensions extends (SparkSessionExtensions => Unit) {
     if (!spark.experimental.extraStrategies.contains(TopKStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ TopKStrategy
-    spark.sessionState.functionRegistry.registerFunction(
-      new FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[FloatVecDot].getName, "graft_dot"),
-      (children: Seq[Expression]) => FloatVecDot(children(0), children(1)))
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(GraftDot))
+      registry.registerFunction(GraftDot,
+        new ExpressionInfo(classOf[FloatVecDot].getName, "graft_dot"),
+        (children: Seq[Expression]) => FloatVecDot(children(0), children(1)))
   }
+
+  private val GraftDot = new FunctionIdentifier("graft_dot")
 }
 
 /** Zero-arg class form for the spark.sql.extensions config. */

@@ -29,7 +29,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *     batch-vs-batch and cross-delivery pairs ride the same join),
   *     est_sim ≥ 0.5 as the integer `matches ≥ 8` — d07's exact τ;
   *  3. edges CONTRACT to the cluster graph (old cluster ids + new doc
-  *     ids — batch-sized, never the corpus) and a min-label loop
+  *     ids — batch-sized, never the corpus) and Dedup.components
   *     computes the rename map old→min. Min-label merge is
   *     associative/idempotent/commutative (the r19 agg-merge law on
   *     labels), which is what makes re-delivery and crash-replay
@@ -120,13 +120,12 @@ object ClusterStream {
       val cEdges = edges
         .join(curLbl.select(col("doc_id").as("doc_a"), col("c").as("x")), "doc_a")
         .join(curLbl.select(col("doc_id").as("doc_b"), col("c").as("y")), "doc_b")
-        .select(col("x"), col("y")).filter(col("x") =!= col("y")).distinct()
-      val cNodes = curLbl.select(col("c").as("node")).distinct()
-      // (node=old cluster, lbl=new) — the shared d18 fixpoint
-      val merged = Dedup.minLabelFixpoint(cNodes, cEdges)
+        .select(lit(0).as("g"), col("x"), col("y"))
+      // (node=old cluster, lbl=new) — the shared d07/d18 components;
+      // a cluster with no merge edge is absent and keeps its id
+      val merged = Dedup.components(cEdges).select(col("node"), col("lbl"))
       val renames = merged.filter(col("lbl") < col("node"))
         .select(col("node").as("oldc"), col("lbl").as("newc"))
-        .localCheckpoint()
 
       // (4) apply: members of renamed clusters (one narrow broadcast-
       // semi scan — see class doc) + this batch's new rows; rewrite

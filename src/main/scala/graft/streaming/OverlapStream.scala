@@ -75,7 +75,7 @@ object OverlapStream {
       graft.plans.TopK.perKey(
         s.read.schema(kmvSchema).parquet(s"$stateDir/kmv")
           .select(col("t"), col("h")).distinct(),
-        Seq(col("t")), Seq(col("h").asc), k),
+        Seq(col("t")), Seq(col("h").asc), k).cache(),
       k)
   }
 

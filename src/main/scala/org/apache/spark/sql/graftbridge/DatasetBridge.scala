@@ -12,16 +12,6 @@ object DatasetBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** `SparkSession.cloneSession()` is private[sql]: an identical-state
-    * session sharing the SparkContext/shared state but with its OWN
-    * SQL conf — graft's micro-loops set their tiny-input conf on such
-    * a clone so concurrent queries on the caller's session are never
-    * planned under it (`newSession()` is public but resets runtime
-    * conf to the builder's, dropping caller overrides).
-    */
-  def cloneSession(s: SparkSession): SparkSession =
-    s.asInstanceOf[classic.SparkSession].cloneSession()
-
   /** Reliable-checkpoint file of a `Dataset.checkpoint()` result (the
     * `rdd-<id>` directory under the context checkpoint dir), if any.
     * A checkpointed Dataset's plan is a LogicalRDD over the

@@ -109,6 +109,13 @@ class GraftExtensionsSpec extends AnyFunSuite {
       .createOrReplaceTempView("vecs")
     val r = spark.sql("SELECT graft_dot(a, b) AS d FROM vecs").collect()
     assert(r.head.getDouble(0) == 11.0)
+    // a repeated install keeps the registered function instead of
+    // replacing it (and logging a replacement warning) on every call
+    val registry = spark.sessionState.functionRegistry
+    val id = new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dot")
+    val info = registry.lookupFunction(id).get
+    GraftExtensions.install(spark)
+    assert(registry.lookupFunction(id).get eq info)
   }
 
   test("row_number window + rn<=k filter is rewritten to TopKPerKey") {

@@ -440,4 +440,71 @@ class PropertySpec extends SparkSpecBase {
       assert(fre >= 0L && fre <= 206835L)
     }
   }
+
+  /** Min-label components per tag by breadth-first search: the plain
+    * reference both Dedup.components paths must equal.
+    */
+  private def bfsLabels(edges: Seq[(Int, Long, Long)]): Set[(Int, Long, Long)] =
+    edges.groupBy(_._1).toSeq.flatMap { case (g, es) =>
+      val adj = es.flatMap(e => Seq(e._2 -> e._3, e._3 -> e._2))
+        .groupMap(_._1)(_._2)
+      val seen = scala.collection.mutable.Set.empty[Long]
+      adj.keys.toSeq.flatMap { start =>
+        if (seen(start)) Nil
+        else {
+          seen += start
+          val comp = scala.collection.mutable.ArrayBuffer(start)
+          var i = 0
+          while (i < comp.length) {
+            adj(comp(i)).foreach(n => if (seen.add(n)) comp += n)
+            i += 1
+          }
+          comp.toSeq.map(n => (g, n, comp.min))
+        }
+      }
+    }.toSet
+
+  test("components: driver union-find and distributed loop equal BFS on random graphs") {
+    val ids = rnd.shuffle((1L to 400L).toVector)
+    def flip(a: Long, b: Long) = if (rnd.nextBoolean()) (a, b) else (b, a)
+    // g0: a 70-hop chain over shuffled ids (longer than the 50-round
+    // cap if labels moved one hop per round); g1: three stars; g2: a
+    // sparse random graph; g3: reuses g0's ids with other edges, so
+    // tags must keep graphs apart. Every graph gets duplicate and
+    // reversed copies of some of its edges.
+    val chain = (0 until 70).map(i => flip(ids(i), ids(i + 1)))
+    val stars = (0 until 3).flatMap { c =>
+      (1 to 10).map(j => flip(ids(100 + c * 11), ids(100 + c * 11 + j)))
+    }
+    val sparse = (0 until 40).map(_ =>
+      flip(ids(200 + rnd.nextInt(60)), ids(200 + rnd.nextInt(60))))
+    val reuse = (0 until 20).map(_ => flip(ids(rnd.nextInt(71)), ids(300 + rnd.nextInt(5))))
+    val base = Seq(0 -> chain, 1 -> stars, 2 -> sparse, 3 -> reuse)
+      .flatMap { case (g, es) => es.map { case (a, b) => (g, a, b) } }
+    val edges = base ++ rnd.shuffle(base).take(30).map(e =>
+      if (rnd.nextBoolean()) e else (e._1, e._3, e._2))
+    val df = rnd.shuffle(edges).toDF("g", "x", "y")
+    def labels(out: org.apache.spark.sql.DataFrame) = out.collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
+    val want = bfsLabels(edges)
+    assert(labels(operators.Dedup.driverComponents(df, df.collect())) == want)
+    assert(labels(operators.Dedup.distributedComponents(df)) == want)
+    assert(labels(operators.Dedup.components(df)) == want)
+    val empty = df.limit(0)
+    assert(operators.Dedup.driverComponents(empty, Array.empty).isEmpty)
+    assert(operators.Dedup.distributedComponents(empty).isEmpty)
+  }
+
+  test("building d07 and d18 persists no RDD and leaves the session conf alone") {
+    // the first build caches the session's minhash signatures, which
+    // both operators share; a second build must add nothing
+    operators.Dedup.dupClustersFrame(spark, sf0001)
+    operators.Dedup.incrementalClusters(spark, sf0001)
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val conf = spark.conf.getAll
+    operators.Dedup.dupClustersFrame(spark, sf0001)
+    operators.Dedup.incrementalClusters(spark, sf0001)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted)
+    assert(spark.conf.getAll == conf)
+  }
 }

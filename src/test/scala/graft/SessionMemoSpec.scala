@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SaveMode
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** Lifecycle of the session-keyed memos (r12 verdict item 5 + advice
@@ -57,5 +57,40 @@ class SessionMemoSpec extends SparkSpecBase {
       assert(operators.Similarity.coarseMemo.sizeFor(spark) == keep,
         "live session's entries were swept too")
     } finally SessionMemos.stoppedProbe = probe0
+  }
+
+  test("concurrent first access builds a memoized artifact once") {
+    val memo = new SessionMemo[(SparkSession, String), DataFrame](_.unpersist())
+    val key = (spark, Files.createTempDirectory("graft-memorace").toString)
+    val builds = new java.util.concurrent.atomic.AtomicInteger()
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.size
+    def build(): DataFrame = {
+      val n = builds.incrementAndGet()
+      Thread.sleep(200) // hold the build open so the other thread races it
+      // a distinct plan per build, so a second build caches its own copy
+      val df = spark.range(0L, 1000L + n, 1L, 1).toDF("id").cache()
+      df.count()
+      df
+    }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val got = (1 to 2).map(_ => pool.submit(
+        new java.util.concurrent.Callable[DataFrame] {
+          def call(): DataFrame = {
+            start.await()
+            memo.getOrElseUpdate(key, build())
+          }
+        }))
+      start.countDown()
+      val frames = got.map(_.get())
+      assert(builds.get == 1, s"artifact built ${builds.get} times")
+      assert(frames(0) eq frames(1))
+      assert(spark.sparkContext.getPersistentRDDs.size == cachedBefore + 1,
+        "a losing build left a cached frame behind")
+    } finally {
+      pool.shutdown()
+      SessionMemos.invalidate(spark, key._2)
+    }
   }
 }
