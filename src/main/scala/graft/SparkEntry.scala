@@ -1244,7 +1244,7 @@ FROM aud ORDER BY band""",
     // d17: d15's other half — precision of the band candidates and
     // the ≥8/16-verified set against the same d04 truth, same planted
     // d18: the Spark side labels the lake-only and the full graph as
-    // two tagged graphs of one Dedup.components call (the routine
+    // two tagged graphs of one Dedup.components call (whose union-find
     // ClusterStream folds deliveries with); the oracle replays TWO
     // full recursive closures (all docs, lake-only docs) from scratch,
     // so the gate proves both labelings equal the transitive closure

@@ -1090,19 +1090,20 @@ object Dedup {
   }
 
   /** Edge count up to which [[components]] runs on the driver: 1M
-    * (g, x, y) rows of longs is a few tens of MB of driver heap.
+    * (g, x, y) rows of longs is a few tens of MB of driver heap. It
+    * also bounds every collect of ClusterStream's driver-side fold.
     */
-  private val DriverMaxEdges: Int = 1 << 20
+  private[graft] val DriverMaxEdges: Int = 1 << 20
 
   /** Connected components of independent tagged undirected graphs —
-    * the one CC routine under d07, d18 and streaming.ClusterStream.
-    * `edges` holds (g, x, y) rows with integral ids, either direction,
-    * duplicates allowed. Returns (g, node, lbl) for every node that
-    * has an edge in graph g, where `lbl` is the smallest node of its
-    * component within g. Min-label components are unique, so both
-    * paths give the same rows and the oracle's recursive closures
-    * replay them. Nodes without an edge do not appear; callers
-    * coalesce them to their own id.
+    * the one CC routine under d07 and d18 (ClusterStream's fold calls
+    * [[minRoots]] directly). `edges` holds (g, x, y) rows with
+    * integral ids, either direction, duplicates allowed. Returns
+    * (g, node, lbl) for every node that has an edge in graph g, where
+    * `lbl` is the smallest node of its component within g. Min-label
+    * components are unique, so both paths give the same rows and the
+    * oracle's recursive closures replay them. Nodes without an edge do
+    * not appear; callers coalesce them to their own id.
     *
     * One bounded collect picks the path: up to [[DriverMaxEdges]]
     * edges run [[driverComponents]], whose local relation Catalyst
@@ -1117,15 +1118,30 @@ object Dedup {
   }
 
   /** [[components]] on the driver over `rows`, the collected (g, x, y)
-    * rows of `edges` (whose schema types the output): min-root
-    * union-find with path halving, so every root is its component's
-    * minimum.
+    * rows of `edges` (whose schema types the output): [[minRoots]] per
+    * graph.
     */
   private[graft] def driverComponents(edges: DataFrame,
       rows: Array[Row]): DataFrame = {
     def num(r: Row, i: Int): Long = r.get(i).asInstanceOf[Number].longValue
-    val forest = mutable.HashMap.empty[Long, mutable.LongMap[Long]]
-    def root(p: mutable.LongMap[Long], x0: Long): Long = {
+    val out = rows.groupBy(num(_, 0)).toSeq.flatMap { case (g, rs) =>
+      minRoots(rs.iterator.map(r => (num(r, 1), num(r, 2))))
+        .toSeq.map { case (x, l) => Row(g, x, l) }
+    }
+    val longs = StructType(Seq("g", "node", "lbl")
+      .map(StructField(_, LongType, nullable = false)))
+    val xType = edges.schema("x").dataType
+    edges.sparkSession.createDataFrame(out.asJava, longs)
+      .select(col("g").cast(edges.schema("g").dataType),
+        col("node").cast(xType), col("lbl").cast(xType))
+  }
+
+  /** Min-root union-find with path halving over undirected `pairs`:
+    * maps every node of a pair to the smallest node of its component.
+    */
+  private[graft] def minRoots(pairs: Iterator[(Long, Long)]): mutable.LongMap[Long] = {
+    val p = mutable.LongMap.empty[Long]
+    def root(x0: Long): Long = {
       var x = x0
       var px = p.getOrElseUpdate(x, x)
       while (px != x) {
@@ -1136,21 +1152,13 @@ object Dedup {
       }
       x
     }
-    rows.foreach { r =>
-      val p = forest.getOrElseUpdate(num(r, 0), mutable.LongMap.empty[Long])
-      val a = root(p, num(r, 1))
-      val b = root(p, num(r, 2))
+    pairs.foreach { case (x, y) =>
+      val a = root(x)
+      val b = root(y)
       if (a < b) p(b) = a else if (b < a) p(a) = b
     }
-    val out = forest.toSeq.flatMap { case (g, p) =>
-      p.keys.toSeq.map(x => Row(g, x, root(p, x)))
-    }
-    val longs = StructType(Seq("g", "node", "lbl")
-      .map(StructField(_, LongType, nullable = false)))
-    val xType = edges.schema("x").dataType
-    edges.sparkSession.createDataFrame(out.asJava, longs)
-      .select(col("g").cast(edges.schema("g").dataType),
-        col("node").cast(xType), col("lbl").cast(xType))
+    p.keys.toArray.foreach(x => p(x) = root(x))
+    p
   }
 
   /** [[components]] for edge sets too large for the driver: min-label

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.plans.OnePartition
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1047,11 +1048,11 @@ object Relational {
       .withColumn("band", expr("cents DIV 10000"))
     val sp = spend.cache() // feeds the band histogram AND the probe
     val hist = sp.groupBy(col("band")).agg(count(lit(1)).as("cnt"))
-    val wLt = Window.orderBy(col("band"))
+    val wLt = OnePartition.window.orderBy(col("band"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val wAll = Window.orderBy(col("band"))
+    val wAll = OnePartition.window.orderBy(col("band"))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val deciles = hist.select(col("band"),
+    val deciles = OnePartition(hist).select(col("band"),
         coalesce(sum(col("cnt")).over(wLt), lit(0L)).as("c_lt"),
         sum(col("cnt")).over(wAll).as("n_cust"))
       .withColumn("decile", expr("CAST(10 * c_lt DIV n_cust AS INT)"))

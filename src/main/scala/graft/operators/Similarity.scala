@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{Tables, TableStats}
 import graft.functions.{Text, Vector}
+import graft.plans.OnePartition
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1668,9 +1669,9 @@ object Similarity {
     val h = cent.join(occ, Seq("cid"), "left")
       .select(col("cid").cast("int").as("cid"),
         coalesce(col("n_occ"), lit(0L)).as("n_vecs"))
-    val wAll = Window
+    val wAll = OnePartition.window
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    h.withColumn("n_total", sum(col("n_vecs")).over(wAll))
+    OnePartition(h).withColumn("n_total", sum(col("n_vecs")).over(wAll))
       .withColumn("n_cells", count(lit(1)).over(wAll))
       .select(col("cid"), col("n_vecs"),
         expr("CAST(n_vecs * 10000 DIV n_total AS BIGINT)").as("share_bp"),
@@ -1880,10 +1881,9 @@ object Similarity {
       .groupBy(col("label"))
       .agg(sum((col("ca") - col("cb")) * (col("ca") - col("cb")))
         .cast("long").as("dist2_milli"))
-    val w = Window.partitionBy()
-    dist.join(counts, "label")
+    OnePartition(dist.join(counts, "label"))
       .withColumn("tot",
-        greatest(sum(col("dist2_milli")).over(w), lit(1L)))
+        greatest(sum(col("dist2_milli")).over(OnePartition.window), lit(1L)))
       .select(col("label"), col("n_a").cast("long").as("n_a"),
         col("n_b").cast("long").as("n_b"), col("dist2_milli"),
         expr("(dist2_milli * 10000) DIV tot").as("share_bp"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.Text
+import graft.plans.OnePartition
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -783,9 +784,9 @@ object TextOps {
       .groupBy(col("term")).agg(count(lit(1)).cast("long").as("freq"))
     val v = vocab.cache() // feeds the freq histogram AND the band probe
     val hist = v.groupBy(col("freq")).agg(count(lit(1)).cast("long").as("nt"))
-    val wGt = Window.orderBy(col("freq").desc)
+    val wGt = OnePartition.window.orderBy(col("freq").desc)
       .rowsBetween(Window.unboundedPreceding, -1)
-    val bands = hist
+    val bands = OnePartition(hist)
       .select(col("freq"),
         (coalesce(sum(col("nt")).over(wGt), lit(0L)) + 1L).as("rank_min"))
       .withColumn("bucket", expr("CAST(length(bin(rank_min)) - 1 AS INT)"))
@@ -886,14 +887,11 @@ object TextOps {
       .cache()
     val hist = sc.groupBy(col("mean_centibits"))
       .agg(count(lit(1)).as("cnt"))
-    val wLt = org.apache.spark.sql.expressions.Window
-      .orderBy(col("mean_centibits"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val wAll = org.apache.spark.sql.expressions.Window
-      .orderBy(col("mean_centibits"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.unboundedFollowing)
-    val terciles = hist.select(col("mean_centibits"),
+    val wLt = OnePartition.window.orderBy(col("mean_centibits"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val wAll = OnePartition.window.orderBy(col("mean_centibits"))
+      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val terciles = OnePartition(hist).select(col("mean_centibits"),
         coalesce(sum(col("cnt")).over(wLt), lit(0L)).as("c_lt"),
         sum(col("cnt")).over(wAll).as("n_docs"))
       .withColumn("tercile", expr("CAST(3 * c_lt DIV n_docs AS INT)"))
@@ -1240,14 +1238,15 @@ object TextOps {
       .select(bucketOf(col("doc_id")).as("bucket"))
       .groupBy(col("bucket"))
       .agg(count(lit(1)).cast("long").as("n_docs"))
-    val w = Window.orderBy(col("bucket"))
-    db.join(nb, Seq("bucket"), "left")
-      .select(col("bucket"), col("n_docs"),
-        coalesce(col("new_shingles"), lit(0L)).as("new_shingles"))
+    val w = OnePartition.window.orderBy(col("bucket"))
+    OnePartition(db.join(nb, Seq("bucket"), "left")
+        .select(col("bucket"), col("n_docs"),
+          coalesce(col("new_shingles"), lit(0L)).as("new_shingles")))
       .withColumn("cum_docs", sum(col("n_docs")).over(w).cast("long"))
       .withColumn("cum_vocab", sum(col("new_shingles")).over(w).cast("long"))
       .withColumn("vocab_per_doc_milli",
         expr("(cum_vocab * 1000) DIV cum_docs"))
+      .drop("_part")
       .orderBy(col("bucket"))
   }
 

@@ -39,4 +39,16 @@ object PartitionPrune {
       table.filter(col(keyCol).isin(head.map(_.get(0)).toSeq: _*))
     else table.join(broadcast(k), Seq(keyCol), "left_semi")
   }
+
+  /** [[filterByKeys]] for keys already on the driver, with no distinct
+    * or collect job: up to [[DefaultMaxInList]] keys a literal `IN`,
+    * above that a broadcast LEFT SEMI join over a local relation of
+    * the keys.
+    */
+  def filterByValues(table: DataFrame, keyCol: String,
+      keys: Seq[Long]): DataFrame =
+    if (keys.length <= DefaultMaxInList)
+      table.filter(col(keyCol).isin(keys: _*))
+    else table.join(broadcast(table.sparkSession
+      .createDataFrame(keys.map(Tuple1(_))).toDF(keyCol)), Seq(keyCol), "left_semi")
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
 import graft.operators.Dedup
-import graft.sources.PartitionPrune
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.PartitionPrune.filterByValues
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -27,28 +27,34 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *  2. verified edges incident to the batch: ONE band-key probe into
   *     the grown index (lake ∪ prior deliveries ∪ this batch — so
   *     batch-vs-batch and cross-delivery pairs ride the same join),
-  *     est_sim ≥ 0.5 as the integer `matches ≥ 8` — d07's exact τ;
-  *  3. edges CONTRACT to the cluster graph (old cluster ids + new doc
-  *     ids — batch-sized, never the corpus) and Dedup.components
-  *     computes the rename map old→min. Min-label merge is
-  *     associative/idempotent/commutative (the r19 agg-merge law on
-  *     labels), which is what makes re-delivery and crash-replay
-  *     converge to the same fixpoint;
-  *  4. the rename map applies to MEMBERS of renamed clusters only:
-  *     one narrow broadcast-semi scan finds them (at 100 TB this scan
-  *     is the price of not keeping a cluster→bucket posting family —
-  *     a two-column columnar read, no shuffle; the posting family is
-  *     the documented upgrade), and the rewrite touches ONLY the doc
-  *     buckets holding affected/new rows (dynamic partition
-  *     overwrite) — IO ∝ touched components, not the corpus.
+  *     est_sim ≥ 0.5 as the integer `matches ≥ 8` — d07's exact τ —
+  *     collected to the driver with the batch's doc ids;
+  *  3. one pruned lookup collects the CURRENT cluster of every edge
+  *     endpoint and batch doc; on the driver the edges CONTRACT to the
+  *     cluster graph and Dedup.minRoots (d07's union-find) gives the
+  *     rename map old→min. Min-label merge is associative/idempotent/
+  *     commutative (the r19 agg-merge law on labels), which is what
+  *     makes re-delivery and crash-replay converge to the same fixpoint;
+  *  4. one narrow lookup finds the doc buckets holding MEMBERS of
+  *     renamed clusters (at 100 TB the price of not keeping a
+  *     cluster→bucket posting family, the documented upgrade), and ONE
+  *     rewrite touches only those buckets and the new rows' (dynamic
+  *     partition overwrite) — IO ∝ touched components, not the corpus.
+  *
+  * Every collect is bounded by Dedup.DriverMaxEdges. A delivery over
+  * it folds in doc_id slices (`pmod(doc_id, k) == i`), one after
+  * another through steps 2–4: min-label merge is associative, and
+  * step 1 wrote the whole delivery's signatures, so a later slice's
+  * probe finds every cross-slice edge again.
   */
 object ClusterStream {
 
   /** Doc-bucket count for the labels store layout. */
   val NBuckets = 64
 
-  private def bucket(c: org.apache.spark.sql.Column) =
-    pmod(c, lit(NBuckets.toLong))
+  private def bucket(c: Column) = pmod(c, lit(NBuckets.toLong))
+
+  private def bucketOf(docId: Long): Long = Math.floorMod(docId, NBuckets.toLong)
 
   /** Seed the store: lake signatures + the batch d07 labeling. */
   def build(s: SparkSession, dir: String, storeDir: String): Unit = {
@@ -73,94 +79,86 @@ object ClusterStream {
     * partition, and re-merging already-merged labels is a fixpoint).
     */
   def foldBatch(batch0: DataFrame, storeDir: String, batchId: Long): Unit = {
-    val ss = batch0.sparkSession // the foreachBatch CLONED session
-    val batch = batch0.cache()
+    val batch = batch0.cache() // batch0 is on the foreachBatch CLONED session
     try {
-      // (1) stateless signatures → own partition (<3-token docs have
-      // no shingles/null signature: label-only singletons)
-      batch.select(col("doc_id") +: Dedup.rowMinhashCols(col("text")): _*)
-        .filter(col("m0").isNotNull)
-        .write.mode("overwrite").parquet(s"$storeDir/sigs/batch_id=$batchId")
-      ss.catalog.refreshByPath(s"$storeDir/sigs")
-
-      // (2) verified edges incident to this batch, against the GROWN
-      // index (this batch's partition included — within-batch pairs
-      // come through the same join); est_sim ≥ 0.5 as matches ≥ 8,
-      // d07's τ — the SHARED primitive d18 gates
-      val allSigs = ss.read.parquet(s"$storeDir/sigs")
-        .select(col("doc_id") +: (0 until 16).map(i => col(s"m$i")): _*)
-      val batchSigs = allSigs
-        .join(batch.select(col("doc_id")), Seq("doc_id"), "left_semi")
-      val edges = Dedup.verifiedIncidentEdges(batchSigs, allSigs)
-        .localCheckpoint()
-
-      // (3) contract to the cluster graph: endpoints + batch docs get
-      // their CURRENT cluster (own id if unseen) — a lookup pruned
-      // TWICE: the store's real partition column `b` (PartitionFilter
-      // on the touched doc buckets) and the doc_id list (pushed row
-      // filter inside them); batch-sized either way
-      val labB = ss.read.parquet(s"$storeDir/labels") // (…, b) partition col
-      val lab = labB.select(col("doc_id"), col("cluster_id"))
-      def docPruned(ids: DataFrame): DataFrame =
-        PartitionPrune.filterByKeys(
-          PartitionPrune.filterByKeys(labB, "b",
-            ids.select(bucket(col("doc_id")).as("b"))),
-          "doc_id", ids)
-          .select(col("doc_id"), col("cluster_id"))
-      val nodes0 = batch.select(col("doc_id"))
-        .union(edges.select(col("doc_a").as("doc_id")))
-        .union(edges.select(col("doc_b").as("doc_id")))
-        .distinct()
-        .localCheckpoint() // feeds the bucket list, the id list, the join
-      val curLbl = nodes0
-        .join(docPruned(nodes0), Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("cluster_id"), col("doc_id")).as("c"))
-        .localCheckpoint()
-      val cEdges = edges
-        .join(curLbl.select(col("doc_id").as("doc_a"), col("c").as("x")), "doc_a")
-        .join(curLbl.select(col("doc_id").as("doc_b"), col("c").as("y")), "doc_b")
-        .select(lit(0).as("g"), col("x"), col("y"))
-      // (node=old cluster, lbl=new) — the shared d07/d18 components;
-      // a cluster with no merge edge is absent and keeps its id
-      val merged = Dedup.components(cEdges).select(col("node"), col("lbl"))
-      val renames = merged.filter(col("lbl") < col("node"))
-        .select(col("node").as("oldc"), col("lbl").as("newc"))
-
-      // (4) apply: members of renamed clusters (one narrow broadcast-
-      // semi scan — see class doc) + this batch's new rows; rewrite
-      // only the doc buckets that hold them
-      val newRows = batch.select(col("doc_id"))
-        .join(docPruned(batch).select(col("doc_id")), Seq("doc_id"),
-          "left_anti")
-        .join(curLbl, Seq("doc_id"), "left")
-        .join(merged.select(col("node").as("cc"), col("lbl")),
-          col("c") === col("cc"), "left")
-        .select(col("doc_id"),
-          coalesce(col("lbl"), col("c"), col("doc_id")).as("cluster_id"))
-      val affected = lab
-        .join(broadcast(renames.select(col("oldc"))),
-          col("cluster_id") === col("oldc"), "left_semi")
-        .select(col("doc_id"))
-      val touchedB = affected.union(newRows.select(col("doc_id")))
-        .select(bucket(col("doc_id")).as("b")).distinct()
-      // the store's own partition column — a real PartitionFilter,
-      // not a recomputed bucket over a full scan
-      val oldTouched = PartitionPrune.filterByKeys(labB, "b", touchedB)
-      val rewritten = oldTouched
-        .join(broadcast(renames), col("cluster_id") === col("oldc"), "left")
-        .select(col("doc_id"),
-          coalesce(col("newc"), col("cluster_id")).as("cluster_id"))
-        .union(newRows)
-        .withColumn("b", bucket(col("doc_id")))
-        .localCheckpoint() // sever from the store BEFORE overwriting it
-      rewritten
-        .repartition(col("b")).sortWithinPartitions(col("doc_id"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("b").parquet(s"$storeDir/labels")
-      ss.catalog.refreshByPath(s"$storeDir/labels")
+      writeSignatures(batch, storeDir, batchId)
+      foldSlice(batch, storeDir, 1L, 0L)
     } finally { batch.unpersist(); () }
+  }
+
+  /** (1) stateless signatures → the batch's own partition (<3-token
+    * docs have no shingles/null signature: label-only singletons).
+    */
+  private[graft] def writeSignatures(batch: DataFrame, storeDir: String,
+      batchId: Long): Unit = {
+    batch.select(col("doc_id") +: Dedup.rowMinhashCols(col("text")): _*)
+      .filter(col("m0").isNotNull)
+      .write.mode("overwrite").parquet(s"$storeDir/sigs/batch_id=$batchId")
+    batch.sparkSession.catalog.refreshByPath(s"$storeDir/sigs")
+  }
+
+  /** Steps 2–4 for the delivery's docs with `pmod(doc_id, k) == i`,
+    * after step 1. A slice whose doc ids, edges or endpoints exceed
+    * Dedup.DriverMaxEdges folds as its halves (2k, i) and (2k, i + k).
+    */
+  private[graft] def foldSlice(batch: DataFrame, storeDir: String,
+      k: Long, i: Long): Unit = {
+    val ss = batch.sparkSession
+    val max = Dedup.DriverMaxEdges
+    val ids = batch.filter(pmod(col("doc_id"), lit(k)) === i)
+      .select(col("doc_id")).limit(max + 1).collect().map(_.getLong(0)).distinct
+    // (2) verified edges incident to the slice, against the GROWN
+    // index (this batch's partition included — within-batch pairs
+    // come through the same join) — the SHARED primitive d18 gates
+    val allSigs = ss.read.parquet(s"$storeDir/sigs")
+      .select(col("doc_id") +: (0 until 16).map(j => col(s"m$j")): _*)
+    val edges =
+      if (ids.isEmpty || ids.length > max) Array.empty[(Long, Long)]
+      else Dedup.verifiedIncidentEdges(
+          filterByValues(allSigs, "doc_id", ids.toSeq), allSigs)
+        .limit(max + 1).collect().map(r => (r.getLong(0), r.getLong(1)))
+    val nodes = (ids ++ edges.flatMap(e => Array(e._1, e._2))).distinct
+    if (ids.length > max || edges.length > max || nodes.length > max) {
+      require(ids.length > 1, s"doc ${ids.head} has over $max near-dup edges")
+      Seq(i, i + k).foreach(foldSlice(batch, storeDir, 2 * k, _))
+    } else if (ids.nonEmpty) {
+      // (3) the nodes' CURRENT cluster (own id if unseen): one lookup
+      // pruned on the store's partition column `b` and the doc_id list
+      val labB = ss.read.parquet(s"$storeDir/labels") // (…, b) partition col
+      val cur = filterByValues(
+          labB.filter(col("b").isin(nodes.map(bucketOf).distinct.toSeq: _*)),
+          "doc_id", nodes.toSeq)
+        .select(col("doc_id"), col("cluster_id")).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      def cluster(n: Long) = cur.getOrElse(n, n)
+      // contract to the cluster graph; a cluster with no merge edge is
+      // absent from the roots and keeps its id
+      val root = Dedup.minRoots(edges.iterator.map(e => (cluster(e._1), cluster(e._2))))
+      val renames = root.toSeq.filter { case (c, l) => l < c }
+      val newRows = ids.toSeq.filterNot(cur.contains).map(d => (d, root.getOrElse(d, d)))
+      // (4) rewrite the buckets holding renamed clusters' members (one
+      // narrow lookup) and the new rows'; dynamic overwrite stages the
+      // output and swaps bucket dirs only at job commit, after every
+      // read of the old files
+      val renamedB = if (renames.isEmpty) Array.empty[Long]
+        else filterByValues(labB, "cluster_id", renames.map(_._1))
+          .select(col("b").cast("long")).distinct().collect().map(_.getLong(0))
+      val touched = (renamedB ++ newRows.map(r => bucketOf(r._1))).distinct
+      if (touched.nonEmpty) {
+        labB.filter(col("b").isin(touched.toSeq: _*))
+          .join(broadcast(ss.createDataFrame(renames).toDF("oldc", "newc")),
+            col("cluster_id") === col("oldc"), "left")
+          .select(col("doc_id"),
+            coalesce(col("newc"), col("cluster_id")).as("cluster_id"))
+          .union(ss.createDataFrame(newRows).toDF("doc_id", "cluster_id"))
+          .withColumn("b", bucket(col("doc_id")))
+          .repartition(col("b")).sortWithinPartitions(col("doc_id"))
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("b").parquet(s"$storeDir/labels")
+        ss.catalog.refreshByPath(s"$storeDir/labels")
+      }
+    }
   }
 
   /** Drain `inDir` (arriving documents, the d11 schema) into the

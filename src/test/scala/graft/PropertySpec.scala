@@ -507,4 +507,58 @@ class PropertySpec extends SparkSpecBase {
     assert(spark.sparkContext.getPersistentRDDs.keySet == persisted)
     assert(spark.conf.getAll == conf)
   }
+
+  test("ClusterStream fold equals batch d07 on seeded token-gradient deliveries") {
+    import graft.streaming.ClusterStream
+    val r = new Random(11)
+    // X(o) = 20 consecutive tokens from offset o: docs 3 offsets apart
+    // band-collide, 12 apart share no band (StreamingSpec's fixture).
+    // Six chains over disjoint token ranges; each kept chain position
+    // holds one or two docs of the lake (0) or of delivery 1–3, so
+    // links fall within a delivery, across deliveries and between lake
+    // clusters. Unrelated docs and a 2-token doc (no signature) ride
+    // along.
+    def x(o: Int) = (o until o + 20).map(i => s"tk$i").mkString(" ")
+    val texts = (0 until 6).flatMap(c => (0 until 8).filter(_ => r.nextInt(4) > 0)
+        .flatMap(j => Seq.fill(1 + r.nextInt(2))(x(100 * c + 3 * j)))) ++
+      (0 until 6).map(i => s"lonely standalone words number $i here") :+ "tiny doc"
+    val ids = r.shuffle((1L to texts.length.toLong).toVector)
+    val docs = texts.indices.map(i => (ids(i), texts(i), r.nextInt(4)))
+    val own = docs.map(d => d._1 -> d._3).toMap
+    def frame(n: Int*) = docs.filter(d => n.contains(d._3))
+      .map { case (id, t, _) => (id, t, "en", "s", t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    def dirOf(df: org.apache.spark.sql.DataFrame) = {
+      val d = java.nio.file.Files.createTempDirectory("graft-clsp").toString
+      df.write.parquet(s"$d/documents.parquet")
+      d
+    }
+    def read(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(row => row.getAs[Long]("doc_id") -> row.getAs[Long]("cluster_id")).toMap
+    val store = java.nio.file.Files.createTempDirectory("graft-clsp").toString + "/st"
+    ClusterStream.build(spark, dirOf(frame(0)), store)
+    val seed = read(ClusterStream.labels(spark, store))
+    ClusterStream.foldBatch(frame(1), store, 0L)
+    ClusterStream.foldBatch(frame(2), store, 1L)
+    // delivery 3 as two doc_id slices: the over-bound path
+    ClusterStream.writeSignatures(frame(3), store, 2L)
+    ClusterStream.foldSlice(frame(3), store, 2L, 0L)
+    ClusterStream.foldSlice(frame(3), store, 2L, 1L)
+    val batch = read(operators.Dedup.dupClusters(spark, dirOf(frame(0, 1, 2, 3))))
+    val folded = read(ClusterStream.labels(spark, store))
+    assert(folded == batch, s"fold/batch diverged: fold=$folded batch=$batch")
+    ClusterStream.foldBatch(frame(2), store, 1L)
+    assert(read(ClusterStream.labels(spark, store)) == folded,
+      "re-delivery moved the labeling")
+    // the seed exercises every link kind
+    val clusters = batch.groupBy(_._2).values.map(_.keys.toSeq).toSeq
+    assert(clusters.exists(c => c.filter(own(_) == 0).map(seed).distinct.size > 1),
+      "no lake clusters merged")
+    assert(clusters.exists(c => c.map(own).filter(_ > 0).distinct.size > 1),
+      "no cross-delivery link")
+    assert(clusters.exists(c => (1 to 3).exists(n => c.count(own(_) == n) > 1)),
+      "no within-delivery link")
+    assert(clusters.exists(c => c.filter(own(_) == 3).map(_ % 2).distinct.size > 1),
+      "no link across delivery 3's slices")
+  }
 }

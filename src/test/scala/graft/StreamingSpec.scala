@@ -535,28 +535,29 @@ class StreamingSpec extends SparkSpecBase {
     assert(spark.read.parquet(outDir2).count() == 2)
   }
 
+  // token-gradient corpus for the ClusterStream specs: X_k = 20
+  // consecutive tokens of one long sequence; J(X_k, X_{k+d}) =
+  // (18−d)/(18+d). d = 3 steps (J ≈ 0.71) BAND-COLLIDE with ≥ 11/16
+  // matching minhashes (measured — d07 links need a full 4-hash band,
+  // not just est_sim ≥ 0.5), while X0 vs X12 (J = 0.2) shares no band.
+  private def xk(k: Int) = (k until k + 20).map(i => s"tk$i").mkString(" ")
+  private def clsDocs(rows: Seq[(Long, String)]) =
+    rows.map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+
   test("cluster stream: deliveries fold into the stored d07 labeling, " +
       "cross-batch edges merge existing clusters") {
     import graft.streaming.ClusterStream
-    // token-gradient corpus: X_k = 20 consecutive tokens of one long
-    // sequence; J(X_k, X_{k+d}) = (18−d)/(18+d). d = 3 steps (J ≈
-    // 0.71) BAND-COLLIDE with ≥ 11/16 matching minhashes (measured —
-    // d07 links need a full 4-hash band, not just est_sim ≥ 0.5),
-    // while X0 vs X12 (J = 0.2) shares no band. The chain
-    // X0–X3–X6–X9–X12 only closes once BOTH deliveries land: X6–X9
-    // arrive in ONE batch, X3–X6 straddles batches — the
+    // The chain X0–X3–X6–X9–X12 only closes once BOTH deliveries land:
+    // X6–X9 arrive in ONE batch, X3–X6 straddles batches — the
     // within-batch, cross-batch and cluster-merge cases at once.
-    def xk(k: Int) = (k until k + 20).map(i => s"tk$i").mkString(" ")
-    def docs(rows: Seq[(Long, String)]) =
-      rows.map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
-        .toDF("doc_id", "text", "lang", "source", "n_chars")
     val lakeDir = Files.createTempDirectory("graft-cls-lake").toString
     val store = Files.createTempDirectory("graft-cls-store").toString + "/st"
     val inDir = Files.createTempDirectory("graft-cls-in").toString
     val ckDir = Files.createTempDirectory("graft-cls-ck").toString
     val lake = Seq((1L, xk(0)), (2L, xk(0)), (3L, xk(12)), (4L, xk(12)),
       (5L, "completely unrelated standalone document body"))
-    docs(lake).write.mode(SaveMode.Overwrite)
+    clsDocs(lake).write.mode(SaveMode.Overwrite)
       .parquet(s"$lakeDir/documents.parquet")
     ClusterStream.build(spark, lakeDir, store)
     // seed sanity: {1,2} and {3,4} are SEPARATE lake clusters
@@ -566,16 +567,16 @@ class StreamingSpec extends SparkSpecBase {
       seed(4L) == 3L && seed(5L) == 5L, seed.toString)
     val d1 = Seq((20L, xk(3)), (21L, "another lonely unrelated text piece"))
     val d2 = Seq((30L, xk(6)), (31L, xk(9)))
-    docs(d1).coalesce(1).write.mode(SaveMode.Append).parquet(inDir)
+    clsDocs(d1).coalesce(1).write.mode(SaveMode.Append).parquet(inDir)
     val q1 = ClusterStream.startFold(spark, inDir, store, ckDir)
     try q1.awaitTermination() finally q1.stop()
-    docs(d2).coalesce(1).write.mode(SaveMode.Append).parquet(inDir)
+    clsDocs(d2).coalesce(1).write.mode(SaveMode.Append).parquet(inDir)
     val q2 = ClusterStream.startFold(spark, inDir, store, ckDir)
     try q2.awaitTermination() finally q2.stop()
     // parity: the folded labeling equals batch d07 over lake ∪ both
     // deliveries
     val allDir = Files.createTempDirectory("graft-cls-all").toString
-    docs(lake ++ d1 ++ d2).write.mode(SaveMode.Overwrite)
+    clsDocs(lake ++ d1 ++ d2).write.mode(SaveMode.Overwrite)
       .parquet(s"$allDir/documents.parquet")
     val batch = operators.Dedup.dupClusters(spark, allDir).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("cluster_id")).toMap
@@ -589,10 +590,34 @@ class StreamingSpec extends SparkSpecBase {
       batch.toString)
     assert(batch(21L) == 21L && batch(5L) == 5L, batch.toString)
     // double delivery of the last batch id is a fixpoint
-    ClusterStream.foldBatch(docs(d2), store, 1L)
+    ClusterStream.foldBatch(clsDocs(d2), store, 1L)
     val again = ClusterStream.labels(spark, store).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("cluster_id")).toMap
     assert(again == folded, "re-delivery moved the labeling")
+  }
+
+  test("cluster stream: folding deliveries persists no RDD and leaves " +
+      "the session conf alone") {
+    import graft.streaming.ClusterStream
+    val lake = Seq((1L, xk(0)), (2L, xk(0)), (3L, xk(12)), (4L, xk(12)))
+    val d1 = Seq((20L, xk(3)), (21L, "another lonely unrelated text piece"))
+    val d2 = Seq((30L, xk(6)), (31L, xk(9)))
+    val lakeDir = Files.createTempDirectory("graft-clsl-lake").toString
+    val allDir = Files.createTempDirectory("graft-clsl-all").toString
+    val store = Files.createTempDirectory("graft-clsl-store").toString + "/st"
+    clsDocs(lake).write.parquet(s"$lakeDir/documents.parquet")
+    clsDocs(lake ++ d1 ++ d2).write.parquet(s"$allDir/documents.parquet")
+    ClusterStream.build(spark, lakeDir, store)
+    // the first batch d07 caches its minhash memo; later runs add none
+    operators.Dedup.dupClusters(spark, allDir).collect()
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val conf = spark.conf.getAll
+    ClusterStream.foldBatch(clsDocs(d1), store, 0L)
+    ClusterStream.foldBatch(clsDocs(d2), store, 1L)
+    ClusterStream.foldBatch(clsDocs(d2), store, 1L)
+    operators.Dedup.dupClusters(spark, allDir).collect()
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted)
+    assert(spark.conf.getAll == conf)
   }
 
   test("vector ingest stream: arriving vectors get the batch cell and codes") {
